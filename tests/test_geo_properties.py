@@ -78,7 +78,6 @@ def test_fuzzy_empty_and_short_queries(shapes):
 def test_fuzzy_finds_exact_city_first(shapes):
     top = fuzzy.fuzzy_search(shapes, "Nashville, TN", 5).first()
     assert top["clean_value"] == "nashville tn"
-    assert top["distance"] == 0
 
 
 def test_fuzzy_filters_restrict(shapes):

@@ -86,6 +86,7 @@ def test_fuzzy_family(gm):
     res = gm.fuzzy_search("Nashville, TN", num_results=5)
     assert 0 < len(res) <= 5
     assert res[0]["clean_value"] == "nashville tn"
+    assert res[0]["distance"] == 0
     assert {
         "id", "value", "clean_value", "ngram_similarity", "score", "distance",
         "extra",
@@ -105,6 +106,27 @@ def test_fuzzy_family(gm):
         "Nashville", num_results=5, filters={"ref_data.state_prov": "TN"}
     )
     assert len(filtered) > 0
+
+
+def test_fuzzy_payload_is_distance_and_shape_record(gm):
+    """Every facade result carries the Damerau distance of the cleaned
+    query to its clean_value (geo_manager.py:28-32) and, as `extra`, the
+    shape record a point lookup returns (geo_manager.py:573/605)."""
+    from yat_geo_db_spark.geo.fuzzy import clean_entity, geo_damerau_distance_py
+
+    seen = set()
+    for q in ("Nashvlile, TN", "ashland metro", "17919"):  # a transposition first
+        for r in gm.fuzzy_search(q, num_results=5):
+            assert list(r) == [
+                "id", "value", "clean_value", "ngram_similarity", "score",
+                "distance", "extra",
+            ]
+            assert r["distance"] == geo_damerau_distance_py(
+                clean_entity(q), r["clean_value"]
+            )
+            assert r["extra"] == gm.get_shape_by_id(r["id"])
+            seen.add((q, r["distance"]))
+    assert ("Nashvlile, TN", 1) in seen
 
 
 def test_add_entity_becomes_searchable(gm):

@@ -552,6 +552,19 @@ def test_skew_report_topk_no_global_sort(spark):
     assert "rangepartitioning" not in plan, plan
 
 
+def test_fuzzy_search_one_join_no_python_worker(spark, shapes):
+    """The search pipeline joins the shapes once — the broadcast
+    candidate top-k carries the `extra` record through dedupe, order and
+    limit — and starts no Python worker: the distance payload is computed
+    in the driver on the collected rows."""
+    from yat_geo_db_spark.geo import fuzzy
+
+    plan = _plan(fuzzy.fuzzy_search(shapes, "Nashville, TN", 10))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    joins = [l for l in plan.splitlines() if "Join" in l]
+    assert len(joins) == 1, plan
+
+
 def test_fuzzy_join_no_cartesian_probe_local_windows(spark):
     """fuzzy_join's candidate generation must stay an equi-join on the
     gram key with probe-LOCAL windows (partitionBy probe_id) — a
@@ -618,7 +631,7 @@ def test_sorted_neighborhood_equi_join_no_single_partition(spark):
     singles = [i for i, l in enumerate(lines) if "Exchange SinglePartition" in l]
     assert singles, "offsets window missing from the plan"
     for i in singles:
-        child = lines[i + 1]
+        child = lines[i + 1] if i + 1 < len(lines) else ""
         assert "HashAggregate(keys=[_pid" in child and "count(1)" in child, (
             "SinglePartition exchange over something other than the "
             "bounded offsets count table:\n" + "\n".join(lines[i - 2: i + 3])

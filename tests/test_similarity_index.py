@@ -1203,6 +1203,31 @@ def test_two_level_multi_probe_routing(spark):
     spark.catalog.clearCache()
 
 
+def test_two_level_routing_thread_joined_when_sub_fit_fails(
+    spark, monkeypatch
+):
+    """The multi-probe routing table is built on a driver thread while the
+    sub-fit runs. When the sub-fit fails, the thread is still joined and
+    its own error is raised, with the sub-fit's error as its context."""
+    import pytest as _pytest
+
+    from yat_geo_db_spark.pipelines import similarity as sim
+
+    def sub_fit_fails(*_a, **_k):
+        raise RuntimeError("sub-fit")
+
+    def routing_fails(*_a, **_k):
+        raise ValueError("routing")
+
+    monkeypatch.setattr(sim, "_sub_assign_carrying_vec", sub_fit_fails)
+    monkeypatch.setattr(sim, "_coarse_top_p", routing_fails)
+    emb = load_table(spark, SF, "embeddings")
+    with _pytest.raises(ValueError, match="routing") as err:
+        sim.kmeans_two_level_fit_assign(emb, k=9, n_iter=1, coarse_probes=2)
+    assert isinstance(err.value.__context__, RuntimeError)
+    spark.catalog.clearCache()
+
+
 def test_semdedup_scaled_multi_probe_pairs_are_exact(spark):
     """semdedup_pairs_scaled(coarse_probes=2): every emitted pair is an
     exact thresholded cosine (emitted ⊆ brute truth) and the pair set

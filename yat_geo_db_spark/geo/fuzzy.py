@@ -11,10 +11,13 @@ derive it with `explode` and, at scale, persist it bucketed by `ngram`
 (geo.ingest) so the probe is a pruned scan. The probe filter
 (`ngram IN (...)`) is pushdown-able; the candidate cap bounds the expensive
 scoring join to ≤ max(num_results, 500) rows regardless of corpus size —
-that cap becomes a broadcast side for the shapes join. Only the
-Damerau-Levenshtein payload column needs Python (vectorized pandas UDF,
-computed AFTER the cap, on ≤500 rows — never on the full table; it is a
-payload, not a ranking signal: geo_manager.py:616-618 rank on `score` only).
+that cap becomes a broadcast side for the shapes join. That one join
+also carries the full shape record as the `extra` struct through the
+dedupe, order and limit, so the result needs no second join. The
+Damerau-Levenshtein distance is a payload, not a ranking signal
+(geo_manager.py:616-618 rank on `score` only): callers compute it in the
+driver with `result_distance` on the ≤ num_results collected rows, so no
+plan here runs a Python worker.
 
 Determinism note (documented divergence, SURVEY.md §7): the reference's
 candidate cap and clean_value dedupe break ties by dict insertion order —
@@ -28,7 +31,6 @@ import re
 
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
-from pyspark.sql.types import IntegerType
 
 from yat_geo_db_spark.geo.radius import shape_filters_predicate
 
@@ -127,8 +129,8 @@ def geo_search_score_col(query: str, source: Column, population: Column) -> Colu
 
 
 # --------------------------------------------------------------------------
-# F4: Damerau-Levenshtein (the single Python hot-path exception — vectorized,
-# and only ever applied to ≤ max(num_results, 500) capped candidates)
+# F4: Damerau-Levenshtein (a driver-side payload, computed on the collected
+# top-k rows only)
 # --------------------------------------------------------------------------
 
 def _damerau_levenshtein(s1: str, s2: str) -> int:
@@ -179,15 +181,10 @@ def geo_damerau_distance_py(val1: str, val2: str) -> int:
     )
 
 
-def geo_damerau_distance_udf(query: str):
-    """Arrow-vectorized pandas UDF computing F4 against a fixed query."""
-
-    def _compute(source):
-        return source.map(
-            lambda s: geo_damerau_distance_py(query, s if s is not None else "")
-        )
-
-    return F.pandas_udf(_compute, IntegerType())
+def result_distance(search_entity: str, clean_value: str | None) -> int:
+    """The `distance` payload of one collected fuzzy result: F4 of the
+    cleaned query against the row's clean_value (a NULL scores as "")."""
+    return geo_damerau_distance_py(clean_entity(search_entity), clean_value or "")
 
 
 # --------------------------------------------------------------------------
@@ -208,17 +205,6 @@ def build_postings(shapes: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataF
     )
 
 
-def add_entities(
-    postings: DataFrame, new_shapes: DataFrame,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Incremental index maintenance (reference add_entity, one record at a
-    time, geo_manager.py:451-476) — here a batch union; dedupe is not wanted
-    (multiplicity is semantic). `extra_cols` must match the columns the base
-    postings were built with (e.g. the partition column)."""
-    return postings.unionByName(build_postings(new_shapes, extra_cols=extra_cols))
-
-
 # --------------------------------------------------------------------------
 # F12/F13: the pipeline
 # --------------------------------------------------------------------------
@@ -229,12 +215,13 @@ def fuzzy_search(
     num_results: int = 50,
     filters: dict | None = None,
     postings: DataFrame | None = None,
-    with_damerau: bool = True,
     partition: tuple[str, object] | None = None,
 ) -> DataFrame:
     """F12 (geo_manager.py:525-619). Returns the top `num_results` scored
-    matches: columns (id, value, clean_value, ngram_similarity, score
-    [, distance]).
+    matches: columns (id, value, clean_value, ngram_similarity, score,
+    extra), where `extra` is the matched shape row as a struct (the
+    reference's payload, geo_manager.py:573/605). The `distance` payload
+    is `result_distance` of each collected row.
 
     `postings` may be a pre-materialized bucketed table; by default it is
     derived on the fly (Catalyst fuses the explode into the scan).
@@ -261,14 +248,9 @@ def fuzzy_search(
             postings = None  # rebuild below from the partition's shapes
     if postings is None:
         postings = build_postings(shapes)
-    if not q_grams:
-        # no trigrams → empty probe → no candidates (reference: Counter of [])
-        return (
-            shapes.select("id", "value", "clean_value")
-            .withColumns({"ngram_similarity": F.lit(0.0), "score": F.lit(0.0)})
-            .limit(0)
-        )
 
+    # no trigrams → empty probe → no candidates (reference: Counter of []);
+    # Catalyst folds the empty IN list and prunes the plan to an empty relation
     candidates = (
         postings.filter(F.col("ngram").isin(q_grams))
         .groupBy("entity_id")
@@ -280,19 +262,17 @@ def fuzzy_search(
     scored = (
         shapes.join(F.broadcast(candidates), shapes["id"] == candidates["entity_id"])
         .filter(shape_filters_predicate(filters))
-        .withColumns(
-            {
-                "ngram_similarity": entity_fuzzy_score_col(query, F.col("clean_value")),
-                "score": geo_search_score_col(
-                    query, F.col("clean_value"), F.col("population")
-                ),
-            }
+        .select(
+            "id", "value", "clean_value",
+            entity_fuzzy_score_col(query, F.col("clean_value")).alias(
+                "ngram_similarity"
+            ),
+            geo_search_score_col(
+                query, F.col("clean_value"), F.col("population")
+            ).alias("score"),
+            F.struct(*[F.col(c) for c in shapes.columns]).alias("extra"),
         )
     )
-    if with_damerau:
-        scored = scored.withColumn(
-            "distance", geo_damerau_distance_udf(query)(F.col("clean_value"))
-        )
 
     # dedupe by clean_value (reference dict-comprehension keyed on clean_value,
     # geo_manager.py:587-612) with a deterministic winner: best score, then id.
@@ -303,13 +283,10 @@ def fuzzy_search(
 
     order_key = F.round(F.col("score"), 6)
     w = Window.partitionBy("clean_value").orderBy(order_key.desc(), F.asc("id"))
-    cols = ["id", "value", "clean_value", "ngram_similarity", "score"] + (
-        ["distance"] if with_damerau else []
-    )
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(*cols)
+        .drop("_rn")
         .orderBy(order_key.desc(), F.asc("id"))
         .limit(num_results)
     )
@@ -412,11 +389,11 @@ def fuzzy_join(
         # BroadcastNestedLoopJoin, which the fuzzy_join plan guard
         # forbids wholesale; Catalyst folds any constant equi-key back
         # into one). The df FRACTION must be over the population the
-        # postings actually index: a caller-supplied index (incl. one
-        # grown by add_entities) can cover more entities than `shapes`,
-        # and dividing by shapes.count() would then over-prune — silent
-        # candidate recall loss (ADVICE r12) — so derive N from the
-        # postings themselves in that case.
+        # postings actually index: a caller-supplied index can cover
+        # more entities than `shapes`, and dividing by shapes.count()
+        # would then over-prune — silent candidate recall loss
+        # (ADVICE r12) — so derive N from the postings themselves in
+        # that case.
         if postings_supplied:
             n_entities = (
                 postings.select("entity_id").distinct().count()

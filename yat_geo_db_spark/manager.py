@@ -20,7 +20,8 @@ Intentional divergences (all documented in SURVEY.md §2/§7):
   store is served, matching the reference's own hard-disabled partitioning
   (`assert not self.partitioned`, geo_manager.py:634).
 - The fuzzy `distance` field uses the same Damerau-Levenshtein definition
-  via a vectorized pandas UDF (geo_manager.py:28-32).
+  (geo_manager.py:28-32), computed in the driver on the collected top-k
+  rows; the `extra` record rides through the search pipeline itself.
 """
 
 from __future__ import annotations
@@ -114,6 +115,10 @@ class GeoManager:
     # ---------------------------------------------------------------- state
 
     def _set_shapes(self, shapes: DataFrame) -> None:
+        """The one place that installs a shapes relation: caches it,
+        derives its postings and resets the derived lookup and partition
+        caches. The replaced relation stays persisted: it may be a frame
+        the caller passed in."""
         self._shapes = shapes.cache()
         # postings carry the partition column when configured, so a
         # partition-scoped probe filters the SAME pre-materialized index
@@ -544,21 +549,6 @@ class GeoManager:
         denom = inter + a * (len(g1) - inter) + b * (len(g2) - inter)
         return float(inter) / denom if denom else 0.0
 
-    def _attach_extra(self, res: DataFrame) -> DataFrame:
-        """Attach the reference's `extra` payload — the full shape record
-        (geo_manager.py:573/605 `'extra': self.geo_shape_dict.get(key)`) —
-        to a fuzzy result. The top-k result (≤ num_results rows) is the
-        broadcast side of one join back to `shapes`, so the enrichment costs
-        nothing at scale; ordering is re-established from the score."""
-        shapes = self.shapes
-        extra = F.struct(*[F.col(f"s.{c}").alias(c) for c in shapes.columns])
-        return (
-            F.broadcast(res).alias("r")
-            .join(shapes.alias("s"), F.col("r.id") == F.col("s.id"), "left")
-            .select("r.*", extra.alias("extra"))
-            .orderBy(F.round(F.col("score"), 6).desc(), F.asc("r.id"))
-        )
-
     def _partition_arg(self, partition):
         """Map a facade `partition=` value to the engine's (col, value) pair.
         Returns (resolved, is_missing): missing partitions short-circuit to
@@ -580,9 +570,11 @@ class GeoManager:
     ) -> List[Dict]:
         """F12 (geo_manager.py:525-619): the flagship pipeline. Each result
         dict carries the reference's full payload, including `extra` (the
-        complete shape record, geo_manager.py:573/605). F14: `partition=`
-        scopes the search to that partition's sub-index when the manager was
-        constructed with `partition_col`; an unknown partition returns []."""
+        complete shape record, geo_manager.py:573/605), which the search
+        carries, and `distance`, computed here on the collected rows. F14:
+        `partition=` scopes the search to that partition's sub-index when the
+        manager was constructed with `partition_col`; an unknown partition
+        returns []."""
         part, missing = self._partition_arg(partition)
         if missing:
             return []
@@ -594,7 +586,13 @@ class GeoManager:
             postings=self._postings,
             partition=part,
         )
-        return [r.asDict(recursive=True) for r in self._attach_extra(res).collect()]
+        out = []
+        for r in res.collect():
+            rec = r.asDict(recursive=True)
+            rec["distance"] = _fuzzy.result_distance(search_entity, rec["clean_value"])
+            rec["extra"] = rec.pop("extra")  # the reference's key order
+            out.append(rec)
+        return out
 
     def best_fuzzy_search(
         self,
@@ -603,21 +601,13 @@ class GeoManager:
         score_threshold: float = 0.90,
         filters: Dict | None = None,
     ) -> Optional[Dict]:
-        """F13 (geo_manager.py:503-523); partition-scoped like fuzzy_search."""
-        part, missing = self._partition_arg(partition)
-        if missing:
-            return None
-        res = self._attach_extra(
-            _fuzzy.best_fuzzy_search(
-                self.shapes,
-                search_entity,
-                score_threshold=score_threshold,
-                filters=filters,
-                postings=self._postings,
-                partition=part,
-            )
-        ).collect()
-        return res[0].asDict(recursive=True) if res else None
+        """F13 (geo_manager.py:503-523): the top fuzzy_search result if it
+        scores at least `score_threshold`, else None; partition-scoped like
+        fuzzy_search."""
+        top = self.fuzzy_search(
+            search_entity, partition, num_results=1, filters=filters
+        )
+        return top[0] if top and top[0]["score"] >= score_threshold else None
 
     def add_entity(
         self,
@@ -627,9 +617,10 @@ class GeoManager:
         extra_entity: Dict | None = None,
     ) -> None:
         """F10 (geo_manager.py:451-476): upsert one searchable entity.
-        The reference mutates its in-memory dicts; here the shapes relation
-        and the derived postings are extended by union (the batch path for
-        bulk loads is `geo.ingest.materialize_postings`).
+        The reference mutates its in-memory dicts; here the upserted shapes
+        relation (a union) replaces the old one through `_set_shapes`, which
+        re-derives the postings from it (the batch path for bulk loads is
+        `geo.ingest.materialize_postings`).
 
         Reference semantics (geo_manager.py:455-460): the stored record is
         `{'value': cleaned, 'clean_value': cleaned}`; `extra_entity`, when a
@@ -640,10 +631,9 @@ class GeoManager:
         the reference's dict store is not — documented divergence).
 
         UPSERT (the reference's dict assignment REPLACES the record,
-        geo_manager.py:461): any existing row with this id — and its
-        postings — is removed before the union, so re-adding an id never
-        leaves duplicate shape rows (which would fan out `_attach_extra`'s
-        join and make `get_shape_by_id` ambiguous).
+        geo_manager.py:461): any existing row with this id is removed before
+        the union, so re-adding an id never leaves duplicate shape rows
+        (which would make `get_shape_by_id` ambiguous) or stale postings.
 
         `partition=` routes the record into that partition's sub-index
         (reference geo_manager.py:463-472): the value is stored in the
@@ -688,12 +678,5 @@ class GeoManager:
             [record], schema=_nullable_schema(self.shapes.schema)
         ).select(*self.shapes.columns)
         kept = self.shapes.filter(F.col("id") != F.lit(entity_id))
-        self._shapes = kept.unionByName(new_shape).cache()
-        self._lookup_cache = None  # invalidated; preload again if serving
-        self._partitions = None
-        extra = (self.partition_col,) if self.partition_col else ()
-        self._postings = _fuzzy.add_entities(
-            self._postings.filter(F.col("entity_id") != F.lit(entity_id)),
-            new_shape,
-            extra_cols=extra,
-        )
+        # drops the lookup cache too: preload again if serving
+        self._set_shapes(kept.unionByName(new_shape))

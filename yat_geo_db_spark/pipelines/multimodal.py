@@ -1635,7 +1635,12 @@ def image_dedup_keep(
     between calls (bench.py does), or pass ``persist=False`` and
     accept the recomputation (the three consumers below then each
     re-run the media lineage — for a decode/synthesize mapInPandas
-    chain that is 3× the Python codec pass)."""
+    chain that is 3× the Python codec pass). With ``persist=False`` the
+    media lineage must also be deterministic (ideally checkpointed):
+    the pHash pass, the kept-dup join and the singleton anti-join each
+    recompute it independently, so a lineage that samples or assigns
+    unstable ids lets them see different rows and return an internally
+    inconsistent result."""
     from yat_geo_db_spark.pipelines.dedup import connected_components
 
     # media is consumed THREE times (the pHash pass, the kept-dup join,

@@ -73,8 +73,7 @@ def damerau_sql(query: str, t: str) -> str:
 
 
 def fuzzy_search_oracle(search_entity: str, num_results: int = 50,
-                        where: str = "", with_distance: bool = True,
-                        pre_where: str = "") -> str:
+                        where: str = "", pre_where: str = "") -> str:
     """Full F12 pipeline oracle (mirrors fuzzy.fuzzy_search stage by stage).
 
     `where` applies AFTER the candidate cap (P12 filters semantics);
@@ -89,9 +88,6 @@ def fuzzy_search_oracle(search_entity: str, num_results: int = 50,
     target = "split_part(clean_value, ' ', 1)" if numeric else "clean_value"
     where_clause = f"WHERE {where}" if where else ""
     pre_where_clause = f"WHERE {pre_where}" if pre_where else ""
-    dist_col = (
-        f", {damerau_sql(query, 'clean_value')} AS distance" if with_distance else ""
-    )
     tg_block = (
         f"{grams_sql(target)} AS tg_grams,"
         if numeric
@@ -149,7 +145,7 @@ dd AS (
 )
 SELECT id, value, clean_value,
        round(ngram_similarity, 6) AS ngram_similarity,
-       round(score, 6) AS score{dist_col}
+       round(score, 6) AS score, {damerau_sql(query, 'clean_value')} AS distance
 FROM dd WHERE rn = 1
 ORDER BY round(score, 6) DESC, id
 LIMIT {num_results}

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 from yat_geo_db_spark.geo import fuzzy, lookup, radius
 from yat_geo_db_spark.geo.fixture import SHAPES_CTE, shapes_df
@@ -42,18 +43,21 @@ def _shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def _fuzzy_out(df: DataFrame, with_distance: bool = True) -> DataFrame:
-    """Round scores like the oracle; distance → long for dtype parity."""
-    cols = [
-        F.col("id"),
-        F.col("value"),
-        F.col("clean_value"),
+def _fuzzy_out(df: DataFrame, search_entity: str) -> DataFrame:
+    """Round scores like the oracle, collect the top-k and add the
+    `distance` payload in the driver (long, for dtype parity); the
+    collected rows come back as a DataFrame in their ranked order."""
+    out = df.select(
+        "id", "value", "clean_value",
         F.round("ngram_similarity", 6).alias("ngram_similarity"),
         F.round("score", 6).alias("score"),
+    )
+    schema = T.StructType(out.schema.fields + [T.StructField("distance", T.LongType())])
+    rows = [
+        (*r, fuzzy.result_distance(search_entity, r["clean_value"]))
+        for r in out.collect()
     ]
-    if with_distance:
-        cols.append(F.col("distance").cast("long").alias("distance"))
-    return df.select(*cols)
+    return df.sparkSession.createDataFrame(rows, schema)
 
 
 def _radius_full_out(df: DataFrame) -> DataFrame:
@@ -74,7 +78,9 @@ def _radius_full_out(df: DataFrame) -> DataFrame:
 
 def q_fuzzy_city(spark, sf_dir):
     """F12 flagship: trigram probe → candidate cap → score → dedupe → top-k."""
-    return _fuzzy_out(fuzzy.fuzzy_search(_shapes(spark, sf_dir), QUERY_CITY, 10))
+    return _fuzzy_out(
+        fuzzy.fuzzy_search(_shapes(spark, sf_dir), QUERY_CITY, 10), QUERY_CITY
+    )
 
 
 def q_fuzzy_filtered(spark, sf_dir):
@@ -85,7 +91,8 @@ def q_fuzzy_filtered(spark, sf_dir):
             QUERY_CITY,
             10,
             filters={"ref_data.state_prov": "TN", "geo_type": "City"},
-        )
+        ),
+        QUERY_CITY,
     )
 
 
@@ -99,19 +106,23 @@ def q_fuzzy_partitioned(spark, sf_dir):
             QUERY_CITY,
             10,
             partition=("ref_data.state_prov", "TN"),
-        )
+        ),
+        QUERY_CITY,
     )
 
 
 def q_fuzzy_zip(spark, sf_dir):
     """F9 numeric branch: zip-mode scores against the first space-token."""
-    return _fuzzy_out(fuzzy.fuzzy_search(_shapes(spark, sf_dir), QUERY_ZIP, 10))
+    return _fuzzy_out(
+        fuzzy.fuzzy_search(_shapes(spark, sf_dir), QUERY_ZIP, 10), QUERY_ZIP
+    )
 
 
 def q_best_fuzzy(spark, sf_dir):
     """F13: top-1 with a 0.90 score threshold."""
     return _fuzzy_out(
-        fuzzy.best_fuzzy_search(_shapes(spark, sf_dir), QUERY_CITY, 0.90)
+        fuzzy.best_fuzzy_search(_shapes(spark, sf_dir), QUERY_CITY, 0.90),
+        QUERY_CITY,
     )
 
 

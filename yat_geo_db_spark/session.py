@@ -3,7 +3,7 @@
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the same
 settings are how we'd configure a 1000-executor cluster job: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), broadcast joins for
-dimension tables, Arrow for the one pandas-UDF path, UTC session time.
+dimension tables, Arrow for the pandas-UDF paths, UTC session time.
 """
 
 from __future__ import annotations
@@ -36,12 +36,6 @@ _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    # Ask for at least one split per core on file scans. NOTE: this cannot
-    # parallelize the local fixture tables (one file, ONE row group — every
-    # extra split reads zero rows; testdata.load_table compensates with an
-    # explicit repartition), but at scale it keeps many-small-file scans from
-    # under-splitting below the core count.
-    "spark.sql.files.minPartitionNum": str(os.cpu_count() or 8),
     # Explicitly keep AQE's coalescing from dropping post-shuffle stages
     # below default parallelism (bytes are a bad proxy for compute cost).
     # This is Spark's default; stated here because we rely on it.
@@ -57,6 +51,21 @@ _DEFAULTS = {
     "spark.driver.host": "127.0.0.1",
     "spark.driver.bindAddress": "127.0.0.1",
 }
+
+
+def _cpu_count() -> int:
+    """Cores the local master runs on: `$SPARK_GRAFT_CPUS` when set (it
+    picks `local[N]`), else every core."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else (os.cpu_count() or 8)
+
+
+def _worker_pythonpath(caller: str | None) -> str:
+    """PYTHONPATH for Spark's Python workers: the directory holding this
+    package, so a worker can unpickle functions defined in it whatever the
+    driver's cwd, followed by the caller's own value."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.pathsep.join(p for p in (root, caller) if p)
 
 
 def get_spark(
@@ -76,8 +85,18 @@ def get_spark(
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, str(v))
+    # Ask for at least one split per core on file scans. NOTE: this cannot
+    # parallelize the local fixture tables (one file, ONE row group — every
+    # extra split reads zero rows; testdata.load_table compensates with an
+    # explicit repartition), but at scale it keeps many-small-file scans from
+    # under-splitting below the core count.
+    builder = builder.config("spark.sql.files.minPartitionNum", str(_cpu_count()))
+    conf = {k: str(v) for k, v in (extra_conf or {}).items()}
+    conf["spark.executorEnv.PYTHONPATH"] = _worker_pythonpath(
+        conf.get("spark.executorEnv.PYTHONPATH")
+    )
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
