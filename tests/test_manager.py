@@ -57,6 +57,8 @@ def test_radius_family(gm):
         "id", "reference_code", "latitude", "longitude", "area",
         "is_aggregate", "bbox",
     }
+    assert gm.get_radius_shape_by_id(rv["id"]) == rv
+    assert gm.get_radius_shape_by_id(10**9) is None
 
 
 def test_pair_distance_and_sentinel(gm):
@@ -267,6 +269,100 @@ def test_add_entity_upsert_replaces_existing_id(spark):
     )
     res = gmu.fuzzy_search("Replaceville New", num_results=5)
     assert [r["id"] for r in res].count(999200) == 1
+
+
+def _no_python_rows(df) -> bool:
+    """True when the optimized plan reads no rows shipped from Python:
+    `createDataFrame` over a list leaves a `LogicalRDD` (a `Scan
+    ExistingRDD` once cached), whose rows Python workers serialize."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "LogicalRDD" not in plan and "ExistingRDD" not in plan
+
+
+@pytest.fixture(scope="module")
+def five_writes(spark, shapes):
+    """A fresh manager after five upserts, each read back, with the count of
+    persisted RDDs before the writes and after each, and the partition count
+    of `shapes` after each."""
+    gmw = GeoManager(spark, shapes=shapes)
+    assert gmw.get_shape_by_ref_code("us__tn__nashville_0") is not None
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    persisted, parts = [], []
+    for i in range(5):
+        gmw.add_entity(f"Flatwrite {i}, KS", 999400 + i)
+        assert gmw.get_shape_by_id(999400 + i)["clean_value"] == f"flatwrite {i} ks"
+        persisted.append(jsc.getPersistentRDDs().size())
+        parts.append(gmw.shapes._jdf.rdd().getNumPartitions())
+    return gmw, before, persisted, parts
+
+
+def test_add_entity_persists_one_delta(five_writes):
+    """Upserts go to one small cached delta beside the cached base: at most
+    one more relation stays persisted however many writes there are."""
+    _, before, persisted, _ = five_writes
+    assert max(persisted) <= before + 1, (before, persisted)
+
+
+def test_add_entity_partition_count_flat(five_writes):
+    """Every read after a write scans the base and one delta partition."""
+    parts = five_writes[3]
+    assert len(set(parts)) == 1, parts
+
+
+def test_written_shapes_read_no_python_rows(shapes, five_writes):
+    """After the writes, `shapes` holds every row and its plan reads none
+    shipped from Python."""
+    gmw = five_writes[0]
+    assert gmw.num_shapes == shapes.count() + 5
+    assert _no_python_rows(gmw.shapes)
+
+
+def test_pair_frame_reads_no_python_rows(gm, monkeypatch):
+    """The one-row `pairs` frame of `get_shape_pair_distance` is built in
+    the JVM, so the call starts no Python worker."""
+    from yat_geo_db_spark.geo import radius
+
+    frames = []
+    real = radius.pair_distances
+
+    def spy(shapes, pairs, *args, **kwargs):
+        frames.append(real(shapes, pairs, *args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(radius, "pair_distances", spy)
+    d = gm.get_shape_pair_distance("us__tn__nashville_0", "us__tn__nashville_0")
+    assert d["distance"] == 0.0
+    assert len(frames) == 1 and _no_python_rows(frames[0])
+
+
+def test_add_entity_wrong_type_raises_at_call(spark, shapes):
+    """A wrongly typed `extra_entity` field fails at the call, before any
+    state changes, with the TypeError `createDataFrame` raises."""
+    gmt = GeoManager(spark, shapes=shapes)
+    with pytest.raises(TypeError):
+        gmt.add_entity("Typo Town", 999500, extra_entity={"population": "many"})
+    assert gmt.get_shape_by_id(999500) is None
+    assert gmt.num_shapes == shapes.count()
+
+
+def test_add_entity_upsert_within_delta_keeps_newest(spark, shapes):
+    """Re-adding an id that already sits in the delta leaves one row, the
+    newest; upserting a base id hides the base row."""
+    import pyspark.sql.functions as F
+
+    gmd = GeoManager(spark, shapes=shapes)
+    base_id = gmd.get_shape_id_by_ref_code("us__tn__nashville_0")
+    gmd.add_entity("Deltaton First, KS", 999600)
+    gmd.add_entity("Other Place, KS", 999601)
+    gmd.add_entity("Deltaton Second, KS", 999600, extra_entity={"population": 7})
+    gmd.add_entity("Nashville Replaced, TN", base_id)
+    rows = gmd.shapes.filter(F.col("id").isin(999600, base_id)).collect()
+    assert sorted((r["id"], r["clean_value"], r["population"]) for r in rows) == sorted(
+        [(999600, "deltaton second ks", 7), (base_id, "nashville replaced tn", 0)]
+    )
+    assert gmd.num_shapes == shapes.count() + 2
+    assert gmd.get_shape_by_ref_code("us__tn__nashville_0") is None
 
 
 def test_add_entity_partition_routing(spark):

@@ -57,3 +57,35 @@ def test_python_workers_import_the_package_from_any_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.splitlines()[-1:] == ["OK"], proc.stdout
+
+
+def test_literal_frame_round_trips_rows_in_the_jvm(spark):
+    """`literal_frame` returns the rows it is given (dicts by field name,
+    tuples by position, nested structs, arrays and NULLs) in one partition,
+    and its plan reads no rows shipped from Python (`LogicalRDD`)."""
+    import pyspark.sql.types as T
+
+    box = T.StructType(
+        [T.StructField("lo", T.DoubleType()), T.StructField("hi", T.DoubleType())]
+    )
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("box", box),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+    ])
+    rows = [
+        {"id": 2**40, "name": 'q"uote', "x": 0.1, "box": {"lo": -1.5}, "tags": ["a"]},
+        (7, None, 1e-300, (2.0, 3.0), []),
+        {"id": None},
+    ]
+    df = session.literal_frame(spark, rows, schema)
+    assert [tuple(r) for r in df.collect()] == [
+        (2**40, 'q"uote', 0.1, (-1.5, None), ["a"]),
+        (7, None, 1e-300, (2.0, 3.0), []),
+        (None, None, None, None, None),
+    ]
+    assert df._jdf.rdd().getNumPartitions() == 1
+    assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert session.literal_frame(spark, [], schema).count() == 0

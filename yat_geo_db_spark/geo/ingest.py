@@ -234,14 +234,16 @@ def compact_shapes(
     manager, root: str, version: str | None = None
 ) -> str:
     """Compaction for the incremental upsert path: `GeoManager.add_entity`
-    extends the shapes relation by per-row unions (fine for serving, but N
-    upserts = N union branches in the plan and N tiny in-memory blocks).
-    Compacting writes the CURRENT relation back as the sorted Parquet
-    layout (one range-partitioned, reference_code-sorted dataset — the
-    same layout ingest produces) and reloads the manager from it, so point
-    gets regain row-group pruning and the plan resets to a single scan.
-    The Delta/Iceberg OPTIMIZE analog for this engine's plain-Parquet
-    store."""
+    keeps its upserts in a delta beside the cached base relation (a driver
+    dict plus one cached one-partition relation, rebuilt on each write), so
+    a write costs in proportion to the delta size, and every read scans the
+    base with the delta's ids filtered out plus the delta. Compacting
+    writes the CURRENT relation back as the sorted Parquet layout (one
+    range-partitioned, reference_code-sorted dataset — the same layout
+    ingest produces) and reloads the manager from it, which makes it the
+    new base and empties the delta: point gets regain row-group pruning and
+    the plan resets to a single scan. The Delta/Iceberg OPTIMIZE analog for
+    this engine's plain-Parquet store."""
     out = write_shapes(manager.shapes, root, version)
     manager.load_data(root, version)
     return out

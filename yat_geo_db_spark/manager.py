@@ -31,21 +31,29 @@ from typing import Dict, List, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
+from pyspark.sql.types import _make_type_verifier
 
 from yat_geo_db_spark.geo import fuzzy as _fuzzy
 from yat_geo_db_spark.geo import ingest as _ingest
 from yat_geo_db_spark.geo import lookup as _lookup
 from yat_geo_db_spark.geo import radius as _radius
+from yat_geo_db_spark.session import literal_frame
 
 _MISSING_PAIR = {"distance": 999, "normalized_distance": 999, "aggregate": False}
+_PAIR_SCHEMA = T.StructType(
+    [T.StructField("orig_ref", T.StringType()), T.StructField("dest_ref", T.StringType())]
+)
+#: the typed radius-view projection of a shape record (geo_manager.py:220-235)
+_RADIUS_VIEW = (
+    "id", "reference_code", "latitude", "longitude", "area", "is_aggregate", "bbox",
+)
 
 
 def _nullable_schema(schema):
     """Recursively nullable copy of a StructType — an upserted row leaves
     unspecified fields NULL even where the base relation is non-nullable
     (union relaxes the merged schema to nullable)."""
-    import pyspark.sql.types as T
-
     def _nullable_type(dt):
         if isinstance(dt, T.StructType):
             return T.StructType(
@@ -76,6 +84,11 @@ class GeoManager:
         self.spark = spark
         self._shapes: DataFrame | None = None
         self._postings: DataFrame | None = None
+        #: the cached base relation, the upserts since it was installed
+        #: (id -> record) and their cached one-partition relation
+        self._base: DataFrame | None = None
+        self._delta: dict = {}
+        self._delta_frame: DataFrame | None = None
         # initialized here (not only in _set_shapes) so lookups on an unloaded
         # manager raise the intended RuntimeError from the `shapes` property
         # instead of AttributeError
@@ -115,16 +128,26 @@ class GeoManager:
     # ---------------------------------------------------------------- state
 
     def _set_shapes(self, shapes: DataFrame) -> None:
-        """The one place that installs a shapes relation: caches it,
-        derives its postings and resets the derived lookup and partition
-        caches. The replaced relation stays persisted: it may be a frame
-        the caller passed in."""
-        self._shapes = shapes.cache()
+        """Install `shapes` as the cached base relation and empty the delta
+        of upserts (see `add_entity`). The replaced base stays persisted:
+        it may be a frame the caller passed in."""
+        self._base = shapes.cache()
+        self._delta = {}
+        self._serve(self._base, None)
+
+    def _serve(self, shapes: DataFrame, delta_frame: DataFrame | None) -> None:
+        """Serve `shapes`, whose upserts (if any) live in `delta_frame`:
+        unpersists the previous delta relation, derives the postings and
+        resets the lookup and partition caches."""
+        if self._delta_frame is not None:
+            self._delta_frame.unpersist()
+        self._delta_frame = delta_frame
+        self._shapes = shapes
         # postings carry the partition column when configured, so a
         # partition-scoped probe filters the SAME pre-materialized index
         # (directory/bucket pruning at scale) instead of rebuilding it
         extra = (self.partition_col,) if self.partition_col else ()
-        self._postings = _fuzzy.build_postings(self._shapes, extra_cols=extra)
+        self._postings = _fuzzy.build_postings(shapes, extra_cols=extra)
         self._lookup_cache = None
         self._partitions = None
 
@@ -266,8 +289,12 @@ class GeoManager:
     # ----------------------------------------------------- point lookups (P*)
 
     def _first(self, df: DataFrame) -> Optional[dict]:
-        row = df.first()
-        return None if row is None else row.asDict(recursive=True)
+        """The row of a key-filtered frame (at most one) as a dict, or
+        None. `collect` runs one Spark job; `first()` is an incremental
+        take that runs another job each time the partitions it scanned
+        hold no row (2 per lookup on the served table)."""
+        rows = df.collect()
+        return rows[0].asDict(recursive=True) if rows else None
 
     def get_shape_by_ref_code(self, reference_code: str) -> Optional[Dict]:
         """P1 (geo_manager.py:84-88)."""
@@ -321,38 +348,38 @@ class GeoManager:
         self, reference_code: str, long_desc: bool = True, user_friendly: bool = False
     ) -> Optional[str]:
         """P8 (geo_manager.py:137-149)."""
-        row = _lookup.shape_display(
+        row = self._first(_lookup.shape_display(
             _lookup.shape_by_ref_code(self.shapes, reference_code),
             long_desc=long_desc,
             user_friendly=user_friendly,
-        ).first()
+        ))
         return None if row is None else row["display"]
 
     def get_shape_display_by_id(
         self, shape_id: int, long_desc: bool = True, user_friendly: bool = False
     ) -> Optional[str]:
         """P9 (geo_manager.py:128-135)."""
-        row = _lookup.shape_display(
+        row = self._first(_lookup.shape_display(
             _lookup.shape_by_id(self.shapes, shape_id),
             long_desc=long_desc,
             user_friendly=user_friendly,
-        ).first()
+        ))
         return None if row is None else row["display"]
 
     def get_shape_time_by_ref_code(
         self, reference_code: str
     ) -> Optional[_dt.datetime]:
         """P10 (geo_manager.py:151-158): wall-clock in the shape's tz."""
-        row = _lookup.shape_local_time(
+        row = self._first(_lookup.shape_local_time(
             _lookup.shape_by_ref_code(self.shapes, reference_code)
-        ).first()
+        ))
         return None if row is None else row["local_time"]
 
     def get_shape_time_by_id(self, shape_id: int) -> Optional[_dt.datetime]:
         """P11 (geo_manager.py:160-165)."""
-        row = _lookup.shape_local_time(
+        row = self._first(_lookup.shape_local_time(
             _lookup.shape_by_id(self.shapes, shape_id)
-        ).first()
+        ))
         return None if row is None else row["local_time"]
 
     # ------------------------------------------------------- radius (R*)
@@ -423,25 +450,12 @@ class GeoManager:
     def get_radius_shape_by_ref_code(self, reference_code: str) -> Optional[Dict]:
         """R10 (geo_manager.py:220-226): the typed radius-view projection."""
         rec = self.get_shape_by_ref_code(reference_code)
-        if rec is None:
-            return None
-        return {
-            k: rec.get(k)
-            for k in (
-                "id",
-                "reference_code",
-                "latitude",
-                "longitude",
-                "area",
-                "is_aggregate",
-                "bbox",
-            )
-        }
+        return None if rec is None else {k: rec.get(k) for k in _RADIUS_VIEW}
 
     def get_radius_shape_by_id(self, shape_id: int) -> Optional[Dict]:
         """R10 (geo_manager.py:228-235)."""
-        ref = self.get_shape_ref_code(shape_id)
-        return None if ref is None else self.get_radius_shape_by_ref_code(ref)
+        rec = self.get_shape_by_id(shape_id)
+        return None if rec is None else {k: rec.get(k) for k in _RADIUS_VIEW}
 
     def get_shape_pair_distance(self, orig_shape_ref: str, dest_shape_ref: str) -> Dict:
         """R8 (geo_manager.py:368-426): haversine + log-area normalization
@@ -449,10 +463,10 @@ class GeoManager:
         False} sentinel. The `aggregate` key mirrors the reference's return
         dicts at geo_manager.py:387-426 (True when either endpoint is an
         aggregate shape)."""
-        pairs = self.spark.createDataFrame(
-            [(orig_shape_ref, dest_shape_ref)], "orig_ref string, dest_ref string"
+        pairs = literal_frame(
+            self.spark, [(orig_shape_ref, dest_shape_ref)], _PAIR_SCHEMA
         )
-        row = _radius.pair_distances(self.shapes, pairs).first()
+        row = self._first(_radius.pair_distances(self.shapes, pairs))
         # branch on the explicit found flag, not the 999.0 sentinel value —
         # a real pair at exactly 999.0 rounded miles must not be swallowed
         if row is None or not row["found"]:
@@ -617,9 +631,18 @@ class GeoManager:
         extra_entity: Dict | None = None,
     ) -> None:
         """F10 (geo_manager.py:451-476): upsert one searchable entity.
-        The reference mutates its in-memory dicts; here the upserted shapes
-        relation (a union) replaces the old one through `_set_shapes`, which
-        re-derives the postings from it (the batch path for bulk loads is
+        The reference mutates its in-memory dicts. Here the record is
+        type-checked in the driver (a wrongly typed field raises TypeError
+        at the call, as `createDataFrame` would) and stored in the DELTA, a
+        driver dict id -> record of the upserts since the base relation was
+        installed. The delta is rebuilt as one cached, one-partition
+        relation from a JSON literal (no Python worker), the previous one is
+        unpersisted, and `shapes` becomes the base without the delta's ids
+        plus the delta; the postings are re-derived from it. A write
+        therefore costs in proportion to the delta, not the table, and
+        every read scans the base and one delta partition.
+        `geo.ingest.compact_shapes` folds the delta into a rewritten base
+        and empties it (the batch path for bulk loads is
         `geo.ingest.materialize_postings`).
 
         Reference semantics (geo_manager.py:455-460): the stored record is
@@ -631,9 +654,10 @@ class GeoManager:
         the reference's dict store is not — documented divergence).
 
         UPSERT (the reference's dict assignment REPLACES the record,
-        geo_manager.py:461): any existing row with this id is removed before
-        the union, so re-adding an id never leaves duplicate shape rows
-        (which would make `get_shape_by_id` ambiguous) or stale postings.
+        geo_manager.py:461): the delta holds one record per id and hides the
+        base row with that id, so re-adding an id never leaves duplicate
+        shape rows (which would make `get_shape_by_id` ambiguous) or stale
+        postings.
 
         `partition=` routes the record into that partition's sub-index
         (reference geo_manager.py:463-472): the value is stored in the
@@ -674,9 +698,13 @@ class GeoManager:
                 record[top] = nested
             else:
                 record[self.partition_col] = partition
-        new_shape = self.spark.createDataFrame(
-            [record], schema=_nullable_schema(self.shapes.schema)
-        ).select(*self.shapes.columns)
-        kept = self.shapes.filter(F.col("id") != F.lit(entity_id))
+        schema = _nullable_schema(self._base.schema)
+        _make_type_verifier(schema)(record)
+        # the new delta is built before it replaces the old one, so a record
+        # that fails here leaves the manager as it was
+        delta = {**self._delta, record["id"]: record}
+        frame = literal_frame(self.spark, list(delta.values()), schema).cache()
+        self._delta = delta
+        kept = self._base.filter(~F.col("id").isin(list(delta)))
         # drops the lookup cache too: preload again if serving
-        self._set_shapes(kept.unionByName(new_shape))
+        self._serve(kept.unionByName(frame), frame)

@@ -16,6 +16,7 @@ import pyspark.sql.types as T
 from yat_geo_db_spark.geo import fuzzy, lookup, radius
 from yat_geo_db_spark.geo.fixture import SHAPES_CTE, shapes_df
 from yat_geo_db_spark.queries import ducksql
+from yat_geo_db_spark.session import literal_frame
 from yat_geo_db_spark.testdata import register_views
 
 #: fixed query points — ids that exist at every scale factor (c_custkey ≥ 1)
@@ -46,7 +47,8 @@ def _shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fuzzy_out(df: DataFrame, search_entity: str) -> DataFrame:
     """Round scores like the oracle, collect the top-k and add the
     `distance` payload in the driver (long, for dtype parity); the
-    collected rows come back as a DataFrame in their ranked order."""
+    collected rows come back, in their ranked order, as a DataFrame that
+    starts no Python worker."""
     out = df.select(
         "id", "value", "clean_value",
         F.round("ngram_similarity", 6).alias("ngram_similarity"),
@@ -57,7 +59,7 @@ def _fuzzy_out(df: DataFrame, search_entity: str) -> DataFrame:
         (*r, fuzzy.result_distance(search_entity, r["clean_value"]))
         for r in out.collect()
     ]
-    return df.sparkSession.createDataFrame(rows, schema)
+    return literal_frame(df.sparkSession, rows, schema)
 
 
 def _radius_full_out(df: DataFrame) -> DataFrame:

@@ -8,9 +8,12 @@ dimension tables, Arrow for the pandas-UDF paths, UTC session time.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 # At 100 TB these become per-job tuning knobs; defaults here are sized for
 # the local[32] / 128 GiB test box.
@@ -133,3 +136,33 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def _json_value(value, dt: T.DataType):
+    """`value` in the JSON form `from_json` reads back as `dt`: a struct
+    from a dict by field name or from a tuple (or Row) by position, as
+    `createDataFrame` accepts either."""
+    if value is None or not isinstance(dt, T.StructType):
+        return value
+    if isinstance(value, dict):
+        return {f.name: _json_value(value.get(f.name), f.dataType) for f in dt}
+    return {f.name: _json_value(v, f.dataType) for f, v in zip(dt, value)}
+
+
+def literal_frame(
+    spark: SparkSession, rows: list, schema: T.StructType
+) -> DataFrame:
+    """A DataFrame of `rows` (dicts by field name, or tuples in `schema`
+    order) that starts no Python worker: the rows travel as one JSON literal
+    that a one-row, one-partition `range` parses in the JVM. The frame has
+    one partition and every field nullable. Structs may be dicts or
+    tuples; other values must be JSON-native (numbers, strings, booleans
+    and lists of them), or `json.dumps` raises TypeError.
+    `createDataFrame` over a Python list instead ships its rows through a
+    `PythonRDD`, which starts Python workers each time the frame is read."""
+    payload = json.dumps([_json_value(r, schema) for r in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(
+            F.from_json(F.lit(payload), T.ArrayType(schema), {"mode": "FAILFAST"})
+        )
+    )
