@@ -1,7 +1,7 @@
 """Profile one bench query: fresh session w/ event log, run once warm
 (after a warmup run), parse the event log into per-job wall + task time.
 
-Usage: python plans/r13/profile_query.py <query> [runs]
+Usage: python plans/r14/profile_query.py <query> [runs]
 """
 import sys, os, json, glob, time
 

@@ -1,43 +1,6 @@
 from __future__ import annotations
 
-import importlib.util
-import os
-import sys
-
 import pytest
-
-# --- test-environment shim: protobuf for transformWithState ---------------
-# The container's python ships no google.protobuf (the TWS state-server
-# protocol needs it), but the preinstalled google-cloud-sdk vendors a
-# modern copy (6.x). Make it importable for BOTH the driver (sys.path) and
-# the local-mode Python workers (PYTHONPATH, inherited by the JVM that
-# spawns them — must be set before the SparkSession exists, hence module
-# scope). Appended, not prepended: only the absent `google` namespace
-# resolves there.
-_VENDORED_PROTOBUF_HOME = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-
-
-def _protobuf_missing() -> bool:
-    try:
-        return importlib.util.find_spec("google.protobuf") is None
-    except ModuleNotFoundError:
-        return True
-
-
-if _protobuf_missing() and os.path.isdir(
-    os.path.join(_VENDORED_PROTOBUF_HOME, "google", "protobuf")
-):
-    sys.path.append(_VENDORED_PROTOBUF_HOME)
-    os.environ["PYTHONPATH"] = (
-        os.environ.get("PYTHONPATH", "")
-        + os.pathsep
-        + _VENDORED_PROTOBUF_HOME
-    ).lstrip(os.pathsep)
-    # the vendored runtime (6.32.0-dev) trails pyspark's gencode (6.33.0)
-    # by one minor version; protobuf's own documented escape hatch accepts
-    # the skew — the TWS StateMessage protocol uses no 6.33-only feature,
-    # and the test's value assertions would catch real wire breakage
-    os.environ["TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"] = "true"
 
 from yat_geo_db_spark.session import get_spark
 

@@ -186,10 +186,11 @@ def test_knn_prefilter_exactness_and_fallback(shapes):
 
 
 def test_knn_accepted_probe_is_not_reexecuted(shapes):
-    """An ACCEPTED pre-filtered top-k comes back as the probe's own rows
-    (LocalRelation) — the winning bounded scan ran once at probe time and
-    is NOT re-run when the caller materializes (round-2 finding: the old
-    return re-executed the same scan, ~2× per kNN call)."""
+    """An ACCEPTED pre-filtered top-k comes back as the probe's own rows —
+    the winning bounded scan ran once at probe time and is NOT re-run when
+    the caller materializes (round-2 finding: the old return re-executed
+    the same scan, ~2× per kNN call): its plan reads no cached `shapes`
+    (no InMemoryRelation)."""
     from yat_geo_db_spark.geo.radius import knn_search
 
     # dense-neighborhood query: the k-th neighbor sits well inside 0.9·r,
@@ -197,7 +198,7 @@ def test_knn_accepted_probe_is_not_reexecuted(shapes):
     # their k-th neighbor is 400+ mi out, past the flat-earth cap)
     out = knn_search(shapes, 36.16, -86.78, k=2, prefilter_radius=250.0)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in plan or "LocalRelation" in plan, plan
+    assert "InMemoryRelation" not in plan, plan
     exact = knn_search(shapes, 36.16, -86.78, k=2, prefilter_radius=None)
     assert [tuple(r) for r in out.collect()] == [tuple(r) for r in exact.collect()]
 
@@ -205,12 +206,13 @@ def test_knn_accepted_probe_is_not_reexecuted(shapes):
 def test_knn_flat_earth_cap_falls_back_to_exact_scan(shapes):
     """Escalated radii past the flat-approximation validity bound must NOT
     trust the ellipse probe: the result falls back to the unbounded exact
-    scan (a distributed plan, not probe rows) and stays exact."""
+    scan (a plan over the cached `shapes`, not probe rows) and stays
+    exact."""
     from yat_geo_db_spark.geo.radius import knn_search
 
     out = knn_search(shapes, 29.139, -121.949, k=10, prefilter_radius=600.0)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan, plan
+    assert "InMemoryRelation" in plan, plan
     exact = knn_search(shapes, 29.139, -121.949, k=10, prefilter_radius=None)
     assert [tuple(r) for r in out.collect()] == [tuple(r) for r in exact.collect()]
 

@@ -1,151 +1,6 @@
-"""Grid-cell spatial layout (geo.grid): gridded radius search must be
-row-identical to the full-scan operator, with PartitionFilters proving the
-pruning actually happens at the source.
-"""
+"""Grid-cell density hotspots and geohash bucketing (geo.grid)."""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
-import pytest
-
-from yat_geo_db_spark.geo import grid
-from yat_geo_db_spark.geo.radius import radius_search_lat_lng
-
-
-@pytest.fixture(scope="module")
-def gridded(spark, shapes, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("grid") / "shapes_gridded")
-    grid.write_gridded_shapes(shapes, path)
-    return grid.read_gridded_shapes(spark, path)
-
-
-# origins: fixture city band (see geo.fixture — lats ~30-48, lngs ~-120..-70)
-CASES = [
-    (36.16, -86.78, 50.0),
-    (36.16, -86.78, 250.0),   # multi-cell cover
-    (40.0, -100.0, 10.0),     # likely-empty area
-    (47.9, -70.1, 400.0),     # corner of the populated band
-]
-
-
-@pytest.mark.parametrize("lat,lng,radius", CASES)
-def test_gridded_matches_full_scan(spark, shapes, gridded, lat, lng, radius):
-    want = sorted(
-        r["id"] for r in radius_search_lat_lng(shapes, lat, lng, radius).collect()
-    )
-    got = sorted(
-        r["id"]
-        for r in grid.radius_search_gridded(gridded, lat, lng, radius).collect()
-    )
-    assert got == want
-
-
-def test_partition_filters_in_plan(gridded):
-    df = grid.radius_search_gridded(gridded, 36.16, -86.78, 50.0)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "cell IN" in plan or "cell#" in plan.split("PartitionFilters")[1][:300]
-
-
-def test_cover_cells_contains_origin_and_grows(spark):
-    lat, lng = 36.16, -86.78
-    origin_cell = (
-        spark.range(1)
-        .select(grid.grid_cell_col(F.lit(lat), F.lit(lng)).alias("c"))
-        .collect()[0]["c"]
-    )
-    small = set(grid.cover_cells(lat, lng, 10.0))
-    big = set(grid.cover_cells(lat, lng, 300.0))
-    assert origin_cell in small
-    assert small <= big
-
-
-def test_aggregates_never_pruned(spark, shapes, gridded):
-    # an origin inside some aggregate's bbox but with a tiny radius: the
-    # aggregate must still be found even though its centroid cell may be
-    # outside the cover set
-    agg = shapes.filter(F.col("is_aggregate")).select(
-        "id", "bbox.ll_latitude", "bbox.ur_latitude",
-        "bbox.ll_longitude", "bbox.ur_longitude",
-    ).first()
-    if agg is None:
-        pytest.skip("fixture has no aggregates")
-    o_lat = (agg["ll_latitude"] + agg["ur_latitude"]) / 2
-    o_lng = (agg["ll_longitude"] + agg["ur_longitude"]) / 2
-    got = {
-        r["id"]
-        for r in grid.radius_search_gridded(gridded, o_lat, o_lng, 1.0).collect()
-    }
-    assert agg["id"] in got
-
-
-def test_radius_join_gridded_row_identical_to_broadcast_join(spark, tmp_path):
-    """The equi-join-on-cells batch form returns exactly the broadcast
-    BNLJ batch form's rows, and no SortMergeJoin of two big sides appears
-    without a cell equi-key (the plan carries the cell join)."""
-    import pyspark.sql.functions as F
-    from yat_geo_db_spark.geo.fixture import shapes_df
-    from yat_geo_db_spark.geo.grid import (
-        radius_join_gridded, read_gridded_shapes, write_gridded_shapes,
-    )
-    from yat_geo_db_spark.geo.radius import radius_join
-    from yat_geo_db_spark.testdata import register_views
-
-    register_views(spark, "/root/testdata/sf0.001", tables=("customer",))
-    shapes = shapes_df(spark)
-    path = str(tmp_path / "gridded")
-    write_gridded_shapes(shapes, path)
-    gridded = read_gridded_shapes(spark, path)
-
-    origins = (
-        shapes.filter((F.col("id") < 12) & ~F.col("is_aggregate"))
-        .select(F.col("id").alias("origin_id"), "latitude", "longitude")
-    )
-    want = {
-        (r["origin_id"], r["id"], r["distance"])
-        for r in radius_join(shapes, origins, 120.0).collect()
-    }
-    got = {
-        (r["origin_id"], r["id"], r["distance"])
-        for r in radius_join_gridded(gridded, origins, 120.0).collect()
-    }
-    assert got == want and want  # identical and non-vacuous
-
-
-def test_cover_cells_col_matches_driver_side_twin(spark):
-    """The Column cover-cells math must equal the driver-side cover_cells
-    for randomized origins/radii (one batched comparison job), including
-    pole-clamped latitudes."""
-    import random
-    import pyspark.sql.functions as F
-    from yat_geo_db_spark.geo.grid import cover_cells, cover_cells_col
-
-    r = random.Random(5)
-    cases = [
-        (round(r.uniform(-88.0, 88.0), 3), round(r.uniform(-179.0, 179.0), 3),
-         round(r.uniform(1.0, 400.0), 1))
-        for _ in range(60)
-    ] + [(89.5, 10.0, 100.0), (-89.9, -170.0, 50.0)]  # polar caps
-    df = spark.createDataFrame(
-        [(i, la, ln, rad) for i, (la, ln, rad) in enumerate(cases)],
-        "i int, lat double, lng double, radius double",
-    )
-    # one radius per row isn't expressible with the scalar-radius Column
-    # helper, so group cases by radius and run one select per radius value
-    by_radius = {}
-    for i, (la, ln, rad) in enumerate(cases):
-        by_radius.setdefault(rad, []).append((i, la, ln))
-    for rad, rows_ in by_radius.items():
-        sub = df.filter(F.col("radius") == rad)
-        got = {
-            row["i"]: sorted(row["cells"])
-            for row in sub.select(
-                "i",
-                cover_cells_col(F.col("lat"), F.col("lng"), rad).alias("cells"),
-            ).collect()
-        }
-        for i, la, ln in rows_:
-            assert got[i] == cover_cells(la, ln, rad), (la, ln, rad)
 
 
 def test_density_hotspots_neighborhood_mass(spark):

@@ -365,6 +365,23 @@ def test_add_entity_upsert_within_delta_keeps_newest(spark, shapes):
     assert gmd.get_shape_by_ref_code("us__tn__nashville_0") is None
 
 
+def test_dropped_manager_releases_its_delta(spark, shapes):
+    """A manager that is collected unpersists its last delta relation, so a
+    throwaway manager that wrote leaves no cached relation behind."""
+    import gc
+
+    jsc = spark.sparkContext._jsc
+    gc.collect()
+    before = jsc.getPersistentRDDs().size()
+    gmx = GeoManager(spark, shapes=shapes)
+    gmx.add_entity("Dropville, KS", 999700)
+    assert gmx.get_shape_by_id(999700)["clean_value"] == "dropville ks"
+    assert jsc.getPersistentRDDs().size() == before + 1
+    del gmx
+    gc.collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_add_entity_partition_routing(spark):
     """F10+F14 (reference geo_manager.py:463-472): `partition=` routes the
     record into that partition's sub-index — found when searching that

@@ -334,31 +334,6 @@ def test_batch_topk_agrees_with_single_query(spark):
         assert got == want, qid
 
 
-def test_ivf_batch_agrees_with_single_query_ivf(spark):
-    """Each query's batch slice equals the single-query multi-probe ivf
-    top-k (modulo the self-match the single form excludes)."""
-    from yat_geo_db_spark.pipelines.similarity import ivf_topk, ivf_topk_batch
-    import pyspark.sql.functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    batch = ivf_topk_batch(emb, queries, k=9, hamming_probe=1).collect()
-    by_q = {}
-    for r in batch:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for qid in (0, 1, 2):
-        rows = sorted(by_q[qid], key=lambda r: r["rank"])
-        assert rows[0]["vec_id"] == qid  # self-match first
-        got = [(r["vec_id"], r["cosine"]) for r in rows[1:]]
-        want = [
-            (r["vec_id"], r["cosine"])
-            for r in ivf_topk(emb, qid, k=8, hamming_probe=1).collect()
-        ]
-        assert got == want, qid
-
-
 def test_arrow_batch_scores_match_fold_path(spark):
     """The vectorized matmul scorer agrees with the oracle-exact fold
     cosine within fp tolerance, for every (vector, query) pair."""

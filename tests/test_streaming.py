@@ -265,69 +265,6 @@ def test_stream_decontamination_matches_batch(spark, tmp_path):
     corpus_bands.unpersist()
 
 
-def test_tws_running_profile(spark, tmp_path):
-    """transformWithStateInPandas: after consuming the whole stream, the
-    latest emitted row per user must equal the batch profile (count +
-    distinct event types).
-
-    The TWS state-server protocol needs protobuf (conftest.py shims a
-    vendored copy when the interpreter ships none) and the RocksDB state
-    store provider (multiple column families); the test sets the provider
-    for this query only and restores the prior conf after."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from pyspark.sql.window import Window
-
-    from yat_geo_db_spark.streaming.stateful import running_user_profile_tws
-
-    events, stream = _events_source(spark, tmp_path)
-    # transformWithState needs multiple column families per state store —
-    # only the RocksDB provider supports that (the default HDFS-backed one
-    # raises STATE_STORE_MULTIPLE_COLUMN_FAMILIES). Scoped to this query:
-    # the conf is snapshotted at .start(), restored after.
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-    try:
-        q = (
-            running_user_profile_tws(stream)
-            .writeStream.format("memory")
-            .queryName("tws_profile")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev_provider)
-    # keep each user's final (largest n_events) emission
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    got = {
-        (r["user_id"]): (r["n_events"], r["n_types"])
-        for r in spark.sql("SELECT * FROM tws_profile")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("event_type").alias("t"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_streaming_decontamination_matches_batch(spark, tmp_path):
     """foreachBatch decontamination: documents streamed from files, filtered
     per micro-batch against a static corpus band index, written to the

@@ -84,34 +84,6 @@ def test_band_join_is_broadcast(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_band_join_binned_row_identical_to_broadcast(spark):
-    """The binned equi-join form returns exactly the broadcast BNLJ's
-    rows, including boundary values (value == lo in, value == hi out) and
-    bands spanning multiple bins."""
-    import pyspark.sql.functions as F
-    from yat_geo_db_spark.relational.temporal import band_join, band_join_binned
-
-    facts = spark.createDataFrame(
-        [(float(v),) for v in
-         [0.0, 4.999, 5.0, 9.99, 10.0, 12.5, 24.999, 25.0, 59.9, 60.0]],
-        "v double",
-    )
-    bands = spark.createDataFrame(
-        [("small", 0.0, 10.0), ("mid", 10.0, 25.0), ("wide", 5.0, 60.0)],
-        "band string, lo double, hi double",
-    )
-    want = sorted(
-        (r["v"], r["band"]) for r in band_join(facts, bands, "v").collect()
-    )
-    for bw in (1.0, 7.0, 25.0, 100.0):
-        got = sorted(
-            (r["v"], r["band"])
-            for r in band_join_binned(facts, bands, "v", bw).collect()
-        )
-        assert got == want, bw
-    assert want  # non-vacuous
-
-
 def test_scd2_intervals_semantics_and_single_exchange(spark):
     from yat_geo_db_spark.relational.temporal import scd2_intervals
 

@@ -9,11 +9,11 @@ Design stance (SURVEY.md §7): a thin library of composable DataFrame
 transformations — no custom execution engine, no Catalyst extensions.
 Correctness paths are built-in `pyspark.sql.functions` expressions
 (oracle-exact, whole-stage codegen); Python appears only where it earns
-its place — one bounded pandas UDF (Damerau-Levenshtein, post-cap ≤500
-rows), Arrow-batched mapInPandas/mapInArrow for binary media codecs
-(real PNG and WAV) and the vectorized batch-ANN bench path. Data lives
-in Parquet; queries are lazy DataFrames; Catalyst/Tungsten/AQE pick the
-physical plan.
+its place — Arrow-batched mapInPandas/mapInArrow for binary media codecs
+(real PNG, JPEG and WAV) and tokenization, and applyInPandasWithState for
+stateful streaming. The geo serving path (`GeoManager`) starts no Python
+worker. Data lives in Parquet; queries are lazy DataFrames;
+Catalyst/Tungsten/AQE pick the physical plan.
 """
 
 from yat_geo_db_spark.session import get_spark

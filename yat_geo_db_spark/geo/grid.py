@@ -1,259 +1,16 @@
-"""Grid-cell spatial layout — the scale upgrade SURVEY.md §4 sketches for
-radius search ("geohash bucketing for partition pruning").
+"""Grid-cell density and geohash bucketing over point shapes.
 
-The reference scans all shapes per radius query (O(N) per query,
-geo_manager.py:327-348). At 100 TB that scan must be PRUNED, not just
-filtered: shapes are written `partitionBy("cell")` where `cell` is an
-integer lat/lng grid cell, and a radius query enumerates the few cells its
-search ellipse's bounding box can touch (pure driver-side scalar math on
-query parameters — no data access) into a `cell IN (...)` predicate.
-Catalyst turns that into PartitionFilters → only the matching directories
-are listed and scanned; everything else is never opened. The residual
-ellipse test runs unchanged on the survivors, so results are identical to
-the full-scan operators (asserted in tests/test_grid.py).
-
-Cell size trades pruning selectivity against directory count: 1° ≈ 69 mi of
-latitude per cell band — city-scale radii touch 1-9 cells of the 64,800.
+- `density_hotspots` ranks occupied lat/lng cells by their 3×3-neighborhood
+  point mass (one groupBy, a 9-row offset explode over the occupied cells,
+  one equi-join).
+- `geohash_col` is the standard base32 geohash of a point as a pure Column
+  expression; `geohash_sql` is its DuckDB mirror for the oracle.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
-
-from yat_geo_db_spark.geo.geometry import (
-    latitude_delta_from_miles,
-    longitude_delta_from_miles,
-)
-from yat_geo_db_spark.geo.radius import radius_match, shape_filters_predicate
-from yat_geo_db_spark.geo.geometry import latitude_delta_col, longitude_delta_col
-
-#: default cell edge in degrees
-CELL_DEG = 1.0
-
-
-def _n_lng_cells(cell_deg: float) -> int:
-    return int(round(360.0 / cell_deg))
-
-
-def grid_cell_col(lat: Column, lng: Column, cell_deg: float = CELL_DEG) -> Column:
-    """Integer grid cell id of a point: row-major over (lat band, lng band).
-    Pure arithmetic — usable at ingest (partition column) and query time.
-    The exact boundary points lat=90 / lng=180 clamp into the last band
-    (a raw floor would mint a row/column index one past the grid, and the
-    ny'th column's row-major id COLLIDES with the next row's column 0 —
-    a phantom cell a cover set would then have to probe)."""
-    ny = _n_lng_cells(cell_deg)
-    n_lat = int(round(180.0 / cell_deg))
-    row = F.least(
-        F.floor((lat + F.lit(90.0)) / F.lit(cell_deg)), F.lit(n_lat - 1)
-    )
-    col = F.least(
-        F.floor((lng + F.lit(180.0)) / F.lit(cell_deg)), F.lit(ny - 1)
-    )
-    return (row * F.lit(ny) + col).cast("long")
-
-
-def cover_cells(
-    latitude: float, longitude: float, radius_miles: float,
-    cell_deg: float = CELL_DEG,
-) -> list[int]:
-    """All cell ids the search ellipse's bounding box can intersect.
-
-    Driver-side scalar math on the three query parameters (no data access,
-    no collect). The longitude delta is evaluated at the band edge with the
-    largest |lat| (cos is smallest there ⇒ delta widest), so coverage is
-    conservative. Latitudes clamp at the poles; longitude wrap at ±180 is
-    NOT handled (the reference's ellipse test doesn't wrap either — shapes
-    straddling the antimeridian are out of model for both engines)."""
-    dlat = latitude_delta_from_miles(radius_miles)
-    lat_lo = max(-90.0, latitude - dlat)
-    lat_hi = min(90.0, latitude + dlat)
-    worst_lat = max(abs(lat_lo), abs(lat_hi))
-    if worst_lat >= 89.0:  # cos → 0: a polar cap covers all longitudes
-        lng_lo, lng_hi = -180.0, 180.0
-    else:
-        dlng = longitude_delta_from_miles(worst_lat, radius_miles)
-        lng_lo = max(-180.0, longitude - dlng)
-        lng_hi = min(180.0, longitude + dlng)
-    ny = _n_lng_cells(cell_deg)
-    n_lat = int(round(180.0 / cell_deg))
-    # clamp like grid_cell_col: the boundary values 90 / 180 floor to an
-    # index one past the grid, and the phantom ny'th column's row-major id
-    # collides with the next row's column 0
-    rows = range(
-        int(math.floor((lat_lo + 90.0) / cell_deg)),
-        min(int(math.floor((lat_hi + 90.0) / cell_deg)), n_lat - 1) + 1,
-    )
-    cols = range(
-        int(math.floor((lng_lo + 180.0) / cell_deg)),
-        min(int(math.floor((lng_hi + 180.0) / cell_deg)), ny - 1) + 1,
-    )
-    return sorted(r * ny + c for r in rows for c in cols)
-
-
-#: aggregates (metro/county bboxes) go to one always-scanned partition:
-#: they match when their BBOX CONTAINS THE ORIGIN, and a wide bbox's
-#: centroid cell can be far outside the search ellipse's cover set — cell
-#: pruning on the centroid would silently drop them. They are a tiny
-#: fraction of the corpus, so always scanning their partition costs ~nothing
-#: and keeps gridded results row-identical to the full scan.
-AGGREGATE_CELL = -1
-
-
-def write_gridded_shapes(
-    shapes: DataFrame, path: str, cell_deg: float = CELL_DEG
-) -> None:
-    """Materialize shapes partitioned by grid cell. One write-time shuffle
-    (repartition on the partition column so each cell directory is written
-    by one task — no small-file explosion from every task writing every
-    cell) amortized over all future pruned queries."""
-    cell = F.when(F.col("is_aggregate"), F.lit(AGGREGATE_CELL)).otherwise(
-        grid_cell_col(F.col("latitude"), F.col("longitude"), cell_deg)
-    )
-    (
-        shapes.withColumn("cell", cell.cast("long"))
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-
-def read_gridded_shapes(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def radius_search_gridded(
-    gridded: DataFrame,
-    latitude: float,
-    longitude: float,
-    radius: float,
-    cell_deg: float = CELL_DEG,
-    country_filter: str | None = None,
-    filters: dict | None = None,
-    exclude_aggregates: bool = False,
-) -> DataFrame:
-    """radius_search_lat_lng over the gridded layout: identical semantics,
-    but a `cell IN (cover_cells(...))` pre-filter prunes partitions before
-    any row is read. The aggregate partition (AGGREGATE_CELL) is always
-    included — see its comment; the ellipse/bbox residual predicate is
-    unchanged, so results are row-identical to the full scan."""
-    cells = cover_cells(latitude, longitude, radius, cell_deg) + [AGGREGATE_CELL]
-    o_lat, o_lng = F.lit(float(latitude)), F.lit(float(longitude))
-    radius_lit = F.lit(float(radius))
-    lat_delta = latitude_delta_col(radius_lit)
-    lng_delta = longitude_delta_col(o_lat, radius_lit)
-    country = F.lit(country_filter) if country_filter is not None else None
-    hits = (
-        gridded.filter(F.col("cell").isin(cells))
-        .filter(radius_match(o_lat, o_lng, lat_delta, lng_delta, country))
-        .filter(shape_filters_predicate(filters))
-    )
-    if exclude_aggregates:
-        hits = hits.filter(~F.col("is_aggregate"))
-    return hits.select("id")
-
-
-def cover_cells_col(
-    lat: Column, lng: Column, radius_miles: float, cell_deg: float = CELL_DEG,
-) -> Column:
-    """Column twin of cover_cells: the array of cell ids an origin's search
-    ellipse bbox can touch, as pure expressions over the origin's
-    coordinates — the explode key of the gridded radius JOIN (cover_cells
-    itself is driver-side scalar math; a TABLE of origins needs this).
-    Same conservative longitude delta at the widest band edge, same pole
-    clamp and ≥89° polar-cap fallback, no antimeridian wrap."""
-    ny = _n_lng_cells(cell_deg)
-    dlat = F.lit(latitude_delta_from_miles(radius_miles))
-    lat_lo = F.greatest(lat - dlat, F.lit(-90.0))
-    lat_hi = F.least(lat + dlat, F.lit(90.0))
-    worst = F.greatest(F.abs(lat_lo), F.abs(lat_hi))
-    # longitude_delta at the worst band edge (cos smallest ⇒ delta widest)
-    dlng = longitude_delta_col(worst, F.lit(float(radius_miles)))
-    lng_lo = F.greatest(lng - dlng, F.lit(-180.0))
-    lng_hi = F.least(lng + dlng, F.lit(180.0))
-    n_lat = int(round(180.0 / cell_deg))
-    row_lo = F.floor((lat_lo + 90.0) / F.lit(cell_deg)).cast("long")
-    row_hi = F.least(
-        F.floor((lat_hi + 90.0) / F.lit(cell_deg)), F.lit(n_lat - 1)
-    ).cast("long")
-    col_lo = F.when(worst >= 89.0, F.lit(0)).otherwise(
-        F.floor((lng_lo + 180.0) / F.lit(cell_deg))
-    ).cast("long")
-    col_hi = F.when(worst >= 89.0, F.lit(ny - 1)).otherwise(
-        F.least(F.floor((lng_hi + 180.0) / F.lit(cell_deg)), F.lit(ny - 1))
-    ).cast("long")
-    return F.flatten(
-        F.transform(
-            F.sequence(row_lo, row_hi),
-            lambda r: F.transform(
-                F.sequence(col_lo, col_hi), lambda c: r * ny + c
-            ),
-        )
-    )
-
-
-def radius_join_gridded(
-    gridded: DataFrame,
-    origins: DataFrame,
-    radius: float,
-    cell_deg: float = CELL_DEG,
-    origin_id_col: str = "origin_id",
-    lat_col: str = "latitude",
-    lng_col: str = "longitude",
-    filters: dict | None = None,
-) -> DataFrame:
-    """Batch radius search for origin tables TOO BIG TO BROADCAST — the
-    100 TB form of radius_join: each origin explodes into its covering
-    cells (cover_cells_col), shapes already carry their single cell
-    (write_gridded_shapes), and candidates come from a plain EQUI-join on
-    the cell id — shuffle-partitioned, AQE-splittable, no nested-loop
-    join of two large tables. The exact dispatch predicate (ellipse /
-    origin-in-bbox, per-origin longitude delta) then decides membership,
-    so results are row-identical to radius_join (asserted in test_grid).
-
-    A shape lives in exactly ONE cell, so a pair can match at most one
-    probe row — no dedup shuffle. Aggregates live in AGGREGATE_CELL,
-    which every origin probes (their wide bboxes can't be cell-pruned on
-    a centroid; see AGGREGATE_CELL's note).
-
-    Returns (origin_id, id, reference_code, distance)."""
-    from yat_geo_db_spark.geo.geometry import haversine_miles
-
-    radius_lit = F.lit(float(radius))
-    probes = origins.select(
-        F.col(origin_id_col),
-        F.col(lat_col).alias("o_lat"),
-        F.col(lng_col).alias("o_lng"),
-        F.explode(
-            F.array_union(
-                cover_cells_col(
-                    F.col(lat_col), F.col(lng_col), radius, cell_deg
-                ),
-                F.array(F.lit(AGGREGATE_CELL).cast("long")),
-            )
-        ).alias("cell"),
-    )
-    lat_delta = latitude_delta_col(radius_lit)
-    lng_delta = longitude_delta_col(F.col("o_lat"), radius_lit)
-    pred = radius_match(F.col("o_lat"), F.col("o_lng"), lat_delta, lng_delta)
-    hits = (
-        gridded.filter(shape_filters_predicate(filters))
-        .join(probes, "cell")
-        .filter(pred)
-    )
-    dist = F.round(
-        haversine_miles(
-            F.col("o_lat"), F.col("o_lng"), F.col("latitude"), F.col("longitude")
-        ),
-        4,
-    )
-    return hits.select(
-        origin_id_col, "id", "reference_code", dist.alias("distance")
-    )
 
 
 def density_hotspots(

@@ -27,6 +27,7 @@ from yat_geo_db_spark.geo.geometry import (
     latitude_delta_col,
     longitude_delta_col,
 )
+from yat_geo_db_spark.session import literal_frame
 
 #: sentinel for missing endpoints (geo_manager.py:374-378)
 MISSING_DISTANCE = 999.0
@@ -261,8 +262,9 @@ def knn_search(
     NOTE this function probes EAGERLY: the ≤ k-row validation probe runs
     Spark jobs at call time (unlike the rest of this module's lazy
     DataFrame builders), and the accepted result is returned as a
-    `createDataFrame` of the probe's rows — the winning scan executes
-    once, not again at caller materialization."""
+    `session.literal_frame` of the probe's rows — the winning scan executes
+    once, not again at caller materialization, and reading the result
+    starts no Python worker."""
     o_lat, o_lng = F.lit(float(latitude)), F.lit(float(longitude))
     dist = F.round(
         haversine_miles(o_lat, o_lng, F.col("latitude"), F.col("longitude")), 4
@@ -298,7 +300,7 @@ def knn_search(
                 # the probe already holds the exact answer — return its rows
                 # instead of a plan that would re-run the scan when the
                 # caller materializes
-                return spark.createDataFrame(probe, shaped.schema)
+                return literal_frame(spark, probe, shaped.schema)
             r *= 4.0
     return _topk(hits)
 
@@ -402,9 +404,7 @@ def radius_join(
     definition), the predicate evaluates inside the join condition of a
     BroadcastNestedLoopJoin — shapes stream through once, nothing
     shuffles. The per-origin longitude delta is a Column over the origin's
-    latitude, so each origin gets its own correctly-scaled ellipse. For
-    origin tables too big to broadcast, pre-grid both sides
-    (geo.grid.write_gridded_shapes) and equi-join on covering cells.
+    latitude, so each origin gets its own correctly-scaled ellipse.
 
     Returns (origin_id, id, reference_code, distance) with exact
     haversine distance attached post-predicate (rounded at 4 like R1)."""
@@ -449,8 +449,7 @@ def nearest_facility(
     stream once, nothing shuffles — and keep the per-point argmin via
     ONE min(struct(distance, facility)) aggregate, ties to the lower
     facility id. Facility tables are small by nature (stores, DCs,
-    metros); a corpus-scale right side needs the gridded join instead
-    (grid.radius_join_gridded)."""
+    metros)."""
     from yat_geo_db_spark.geo.geometry import haversine_miles
 
     p = points.select(

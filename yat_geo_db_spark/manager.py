@@ -27,6 +27,7 @@ Intentional divergences (all documented in SURVEY.md §2/§7):
 from __future__ import annotations
 
 import datetime as _dt
+import weakref
 from typing import Dict, List, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,10 +86,12 @@ class GeoManager:
         self._shapes: DataFrame | None = None
         self._postings: DataFrame | None = None
         #: the cached base relation, the upserts since it was installed
-        #: (id -> record) and their cached one-partition relation
+        #: (id -> record) and the finalizer that unpersists their cached
+        #: one-partition relation, when the next one replaces it or when
+        #: this manager is collected
         self._base: DataFrame | None = None
         self._delta: dict = {}
-        self._delta_frame: DataFrame | None = None
+        self._release_delta: weakref.finalize | None = None
         # initialized here (not only in _set_shapes) so lookups on an unloaded
         # manager raise the intended RuntimeError from the `shapes` property
         # instead of AttributeError
@@ -138,10 +141,15 @@ class GeoManager:
     def _serve(self, shapes: DataFrame, delta_frame: DataFrame | None) -> None:
         """Serve `shapes`, whose upserts (if any) live in `delta_frame`:
         unpersists the previous delta relation, derives the postings and
-        resets the lookup and partition caches."""
-        if self._delta_frame is not None:
-            self._delta_frame.unpersist()
-        self._delta_frame = delta_frame
+        resets the lookup and partition caches. `delta_frame` is unpersisted
+        in turn by the next call or when this manager is collected, but not
+        at interpreter exit, when the JVM may already be gone."""
+        if self._release_delta is not None:
+            self._release_delta()
+        self._release_delta = None
+        if delta_frame is not None:
+            self._release_delta = weakref.finalize(self, delta_frame.unpersist)
+            self._release_delta.atexit = False
         self._shapes = shapes
         # postings carry the partition column when configured, so a
         # partition-scoped probe filters the SAME pre-materialized index

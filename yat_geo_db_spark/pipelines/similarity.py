@@ -1714,53 +1714,6 @@ def brute_force_topk_batch(
     return _two_phase_topk(scored, k, query_id_col, id_col)
 
 
-def ivf_topk_batch(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10, bits: int = 8,
-    hamming_probe: int = 1,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    query_id_col: str = "query_id", query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Batched APPROXIMATE top-k: each query probes its sign-bit bucket
-    (plus `hamming_probe` bit-flip neighbors) via an EQUI-join on the
-    bucket id — the batch form of ivf_topk, and the scale shape when the
-    query batch itself is large: candidates per query are ~N·(1+bits)/2^bits
-    rows riding a shuffle-partitioned join (AQE-splittable), not a
-    Q×N cross join. Per-query top-k is the same two-phase windowed
-    top-k as brute_force_topk_batch (_two_phase_topk). A corpus vector sits in ONE
-    bucket, so it meets a query through at most one probe row — no dedup.
-
-    Returns (query_id, vec_id, cosine, rank); self-matches are not
-    excluded (a stored query vector ranks itself first)."""
-    bucketed = embeddings.select(
-        F.col(id_col), F.col(vec_col).alias("_v"),
-        signbit_bucket(F.col(vec_col), bits).alias("_bucket"),
-    )
-    qb = queries.select(
-        F.col(query_id_col), F.col(query_vec_col).alias("_qv"),
-        signbit_bucket(F.col(query_vec_col), bits).alias("_qbucket"),
-    )
-    flips = [F.col("_qbucket").cast("long")]
-    if hamming_probe >= 1:
-        flips += [
-            F.col("_qbucket").bitwiseXOR(F.lit(1 << j)).cast("long")
-            for j in range(bits)
-        ]
-    if hamming_probe >= 2:
-        raise NotImplementedError("probe radius > 1 not needed yet")
-    probes = F.broadcast(
-        qb.select(
-            query_id_col, "_qv", F.explode(F.array(*flips)).alias("_bucket")
-        )
-    )
-    scored = bucketed.join(probes, "_bucket").select(
-        query_id_col,
-        F.col(id_col),
-        F.round(cosine_col(F.col("_v"), F.col("_qv")), 6).alias("cosine"),
-        F.spark_partition_id().alias("_part"),
-    )
-    return _two_phase_topk(scored, k, query_id_col, id_col)
-
-
 def batch_cosine_scores_arrow(
     embeddings: DataFrame, query_vecs: list[list[float]],
     id_col: str = "vec_id", vec_col: str = "embedding",

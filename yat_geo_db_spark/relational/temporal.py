@@ -100,49 +100,6 @@ def band_join(
     )
 
 
-def band_join_binned(
-    facts: DataFrame,
-    bands: DataFrame,
-    value_col: str,
-    bin_width: float,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-) -> DataFrame:
-    """Range join for band tables TOO BIG TO BROADCAST — the binned form
-    of band_join (same trick as geo.grid.radius_join_gridded): both sides
-    map onto a fixed-width bin grid — facts to the single bin holding
-    their value, bands to EVERY bin their [lo, hi) interval covers — and
-    candidates come from a plain EQUI-join on the bin id
-    (shuffle-partitioned, AQE-splittable) with the exact range predicate
-    as the residual. Pick `bin_width` near the typical band width: each
-    band then explodes into O(1) bins and each fact meets only the bands
-    overlapping its bin.
-
-    A fact lives in exactly one bin, so a (fact, band) pair meets at most
-    once — no dedup shuffle. Row-identical to band_join (asserted in
-    test_temporal)."""
-    bw = float(bin_width)
-    fact_bin = F.floor(F.col(value_col) / F.lit(bw)).cast("long")
-    band_bins = F.sequence(
-        F.floor(F.col(lo_col) / F.lit(bw)).cast("long"),
-        # hi is exclusive: a band ending exactly on a bin edge does not
-        # reach into that bin
-        F.floor(
-            (F.col(hi_col) - F.lit(1e-9)) / F.lit(bw)
-        ).cast("long"),
-    )
-    b = bands.withColumn("_bin", F.explode(band_bins))
-    f = facts.withColumn("_bin", fact_bin)
-    return (
-        f.join(b, "_bin")
-        .filter(
-            (F.col(value_col) >= F.col(lo_col))
-            & (F.col(value_col) < F.col(hi_col))
-        )
-        .drop("_bin")
-    )
-
-
 def scd2_intervals(
     events: DataFrame,
     key_col: str = "user_id",

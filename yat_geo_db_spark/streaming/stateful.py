@@ -84,83 +84,6 @@ def running_user_totals(events: DataFrame, idle_timeout_ms: int | None = None) -
 
 
 # --------------------------------------------------------------------------
-# transformWithStateInPandas — the current-generation stateful API
-# --------------------------------------------------------------------------
-
-TWS_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_types", T.LongType()),
-    ]
-)
-
-
-def running_user_profile_tws(events: DataFrame) -> DataFrame:
-    """Per-user running profile (event count + distinct event-type count)
-    via `transformWithStateInPandas` — the successor API to
-    applyInPandasWithState: typed state handles (ValueState here; List/Map
-    state and timers available), explicit TTL support, and state schema
-    evolution. Emits one row per user per micro-batch the user appears in.
-
-    Scale: identical state-store placement to the older API (state hashed
-    by grouping key across shuffle partitions; RocksDB provider for large
-    cardinalities); the win is operational — typed handles instead of a
-    single tuple blob, so state can evolve without full rewrites."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("types", T.StringType()),  # JSON array (see below)
-        ]
-    )
-
-    class Profile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("profile", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            import json
-
-            (user_id,) = key
-            n, seen = 0, set()
-            if self._state.exists():
-                prev_n, prev_types = self._state.get()
-                n = prev_n
-                # JSON array, not a '|'-join: a separator-joined string
-                # loses the empty type ('' is falsy) and miscounts any
-                # type containing the separator
-                seen = set(json.loads(prev_types))
-            for pdf in rows:
-                n += len(pdf)
-                seen.update(pdf["event_type"].unique().tolist())
-            self._state.update((n, json.dumps(sorted(seen))))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "n_types": [len(seen)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            Profile(),
-            outputStructType=TWS_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # streaming transition counts — cross-batch sequence state
 # --------------------------------------------------------------------------
 
